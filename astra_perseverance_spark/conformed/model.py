@@ -614,12 +614,16 @@ def _tune_session(spark: SparkSession) -> None:
 def load_model(spark: SparkSession, sf_dir: str) -> ConformedModel:
     """Build (memoized) the conformed model for a scale-factor dir.
 
-    The model is ``.cache()``-ed on first load: every query re-reads the
-    same conformed facts, and without the cache multi-view queries (Q20
-    summary) re-derive the big fact up to 8× per run — at 100 TB that is
-    8× wasted scan I/O.  Storage is MEMORY_AND_DESER per Spark default;
-    the conformed grain is orders of magnitude smaller than the raw
-    input, so it fits executor memory at any realistic scale factor."""
+    The synthetic model is ``.cache()``-ed on first load: every query
+    re-reads the same conformed facts, and without the cache multi-view
+    queries (Q20 summary) re-derive the big fact up to 8× per run — at
+    100 TB that is 8× wasted scan I/O.  Storage is MEMORY_AND_DESER per
+    Spark default; the conformed grain is orders of magnitude smaller
+    than the raw input, so it fits executor memory at any realistic
+    scale factor.  A diag tree's model is not cached here:
+    ``sources.diag`` parses the tree once and ``localCheckpoint``s each
+    frame, so queries plan over lineage-free frames (see that module
+    for the executor-loss trade-off)."""
     key = _session_key(spark, sf_dir)
     if key not in _MODEL_CACHE:
         import os

@@ -372,6 +372,11 @@ def write_workbook(spark: SparkSession, sf_dir: str, out_path: str,
         if qname == "proxyhistograms_ms":
             _proxyhist_sheet(wb, tab, df)
             continue
+        if qname == "data_size":
+            # the query's own grand-total row (ks = tbl = ''): the tab's
+            # live SUM row replaces it, and rendered it would sit inside
+            # the SUM range and double the total
+            df = df.filter("ks != '' OR tbl != ''")
         comment = TAB_COMMENTS.get(qname)
         total_row = _df_sheet(
             wb, tab, df, cols,

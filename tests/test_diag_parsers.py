@@ -162,6 +162,125 @@ class TestProxyhistograms:
         assert "98%" not in pcts and "99%" in pcts
 
 
+FRAME_BUILDERS = {
+    "missing_node": "build_missing_node",
+    "node_info": "build_node_info",
+    "keyspace_rf": "build_keyspace_rf",
+    "schema_object": "build_schema_objects",
+    "schema_column": "build_schema_columns",
+    "cfstats_metric": "build_cfstats_metric",
+    "gc_event": "build_gc_event",
+    "tombstone_event": "build_tombstone_event",
+    "proxyhistogram": "build_proxyhistogram",
+}
+
+
+def _frame_rows(df):
+    """Order-free row multiset (reprs: rows may hold None)."""
+    return sorted(repr(r) for r in df.collect())
+
+
+class TestParseContext:
+    """One parse per tree: one scan per input family, every conformed
+    frame checkpointed, and the standalone builders on the same path."""
+
+    def test_model_frames_read_no_files(self, model):
+        """Each frame's plan is one checkpointed ``LogicalRDD`` leaf,
+        not a cached copy of the parse lineage, and reads no files."""
+        for name in FRAME_BUILDERS:
+            df = getattr(model, name)
+            assert df._jdf.queryExecution().analyzed().nodeName() \
+                == "LogicalRDD", name
+            assert df.inputFiles() == [], name
+
+    @pytest.mark.parametrize("frame", sorted(FRAME_BUILDERS))
+    def test_builder_matches_model_frame(self, spark, model, frame):
+        from astra_perseverance_spark.sources import diag
+
+        built = getattr(diag, FRAME_BUILDERS[frame])(spark, FIXTURE_DIAG)
+        assert _frame_rows(built) == _frame_rows(getattr(model, frame))
+
+    def test_one_scan_per_input_family(self, spark, monkeypatch):
+        """One reader call per family while the model is built, each
+        over exactly that family's files."""
+        import glob
+        import os
+
+        from pyspark.sql.readwriter import DataFrameReader
+
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
+
+        reads = []
+        real_text, real_load = DataFrameReader.text, DataFrameReader.load
+
+        def files(paths):
+            return {os.path.realpath(p) for p in paths}
+
+        def text(self, paths, *args, **kwargs):
+            kind = "text" if kwargs.get("wholetext") else "log_text"
+            reads.append((kind, files(paths)))
+            return real_text(self, paths, *args, **kwargs)
+
+        def load(self, path=None, *args, **kwargs):
+            reads.append(("log_zip", files(path)))
+            return real_load(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameReader, "text", text)
+        monkeypatch.setattr(DataFrameReader, "load", load)
+        load_model_from_diag(spark, FIXTURE_DIAG)
+
+        tree = os.path.realpath(FIXTURE_DIAG)
+        nodetool = {p for p in glob.glob(f"{tree}/nodes/*/nodetool/*")
+                    if not p.endswith("describecluster")}
+        schema = set(glob.glob(f"{tree}/nodes/*/driver/schema"))
+        logs = set(glob.glob(f"{tree}/nodes/*/logs/cassandra/system*")) \
+            | set(glob.glob(f"{tree}/AdditionalLogs/*/var/log/cassandra/system*"))
+        expected = {
+            "text": nodetool | schema,
+            "log_text": {p for p in logs if not p.endswith(".zip")},
+            "log_zip": {p for p in logs if p.endswith(".zip")},
+        }
+        assert all(expected.values())
+        assert sorted(kind for kind, _ in reads) == sorted(expected)
+        assert dict(reads) == expected
+
+    def test_width_follows_spark_split_sizing(self, spark):
+        """A family's width floors tasks at openCostInBytes and caps
+        them at maxPartitionBytes, one per core in between: tiny trees
+        parse in one partition, big ones over every core."""
+        from astra_perseverance_spark.sources.diag import _width
+
+        conf = spark._jsparkSession.sessionState().conf()
+        open_cost = conf.filesOpenCostInBytes()
+        max_part = conf.filesMaxPartitionBytes()
+        par = spark.sparkContext.defaultParallelism
+        assert _width(spark, 0) == 1
+        assert _width(spark, open_cost) == 1
+        assert _width(spark, 2 * open_cost) == min(par, 2)
+        assert _width(spark, par * open_cost) == par
+        assert _width(spark, 10 * par * max_part) == 10 * par
+
+    def test_interpreted_eval_matches_codegen(self, spark, model):
+        """With whole-stage codegen off (Spark's own fallback for
+        oversized generated code), subexpression elimination may
+        evaluate an array index before the guard that protects it;
+        every index is a try_element_at, so the parse still succeeds
+        and yields the same frames."""
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
+
+        key = "spark.sql.codegen.wholeStage"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            interpreted = load_model_from_diag(spark, FIXTURE_DIAG)
+            got = {name: _frame_rows(getattr(interpreted, name))
+                   for name in FRAME_BUILDERS}
+        finally:
+            spark.conf.set(key, before)
+        for name in FRAME_BUILDERS:
+            assert got[name] == _frame_rows(getattr(model, name)), name
+
+
 class TestQueriesOverDiag:
     def test_workload_reads_rf_normalization(self, spark):
         """Hand-computed: shop.orders reads = (100+200)/3 + (1100+1200)/2

@@ -100,10 +100,13 @@ class TestWorkbook:
         rows = _sheet_rows(report["xlsx"], EXPECTED_TABS.index("Node Data") + 1)
         assert len(rows) == 1 + 4 + 1  # header + 4 nodes + Avg Uptime row
 
-    def test_total_rows_are_live_formulas_with_cached_values(self, report):
+    def test_total_rows_are_live_formulas_with_cached_values(self, spark,
+                                                              report):
         """The reference writes totals as recomputing formulas
         (explore.py:1556-1559, 1724, 1758-1760); each formula cell must
         also carry the Spark-computed cached value as fallback."""
+        from astra_perseverance_spark.queries import QUERY_REGISTRY
+
         def cells(tab):
             with zipfile.ZipFile(report["xlsx"]) as zf:
                 ws = ET.fromstring(zf.read(
@@ -126,8 +129,20 @@ class TestWorkbook:
 
         ds = cells("Data Size")
         (expr, cached), = [ds[k] for k in ds if k.startswith("C")]
-        assert expr.startswith("SUM(C2:C")
-        assert float(cached) > 0
+        # the query's own grand-total row (ks = tbl = '') is not
+        # rendered: the SUM covers the per-table rows only, and its
+        # cached value is the query's total, not twice it
+        rows = QUERY_REGISTRY["data_size"](spark, FIXTURE_DIAG).collect()
+        (total,) = [r["size_bytes"] for r in rows
+                    if r["ks"] == "" and r["tbl"] == ""]
+        assert expr == f"SUM(C2:C{len(rows)})"
+        assert total > 0
+        assert float(cached) == pytest.approx(total, rel=1e-12)
+        ds_rows = _sheet_rows(report["xlsx"],
+                              EXPECTED_TABS.index("Data Size") + 1)
+        assert len(ds_rows) == 1 + (len(rows) - 1) + 1  # header, tables, Total
+        assert all(r[0] and r[1] for r in ds_rows[1:-1])
+        assert ds_rows[-1][0] == "Total"
 
         wl = cells("Workload")
         exprs = {e for e, _ in wl.values()}
